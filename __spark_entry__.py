@@ -510,7 +510,9 @@ def _handoff(df: DataFrame, name: str, sf_dir: str) -> DataFrame:
         # pure task-scheduling overhead at sf0.1 (64 scan tasks over
         # 5k rows), while 1 MB/file recovers full-width scans at the
         # driver's sf1.0+ sizes. Rows and schema are unchanged, so the
-        # DuckDB oracle reads identical data from the same glob.
+        # DuckDB oracle reads identical data from the same glob. An
+        # unknown source size (an in-memory frame, or inputFiles()
+        # failing) gets full width rather than one file.
         sc = df.sparkSession.sparkContext
         src_bytes = 0
         try:
@@ -520,7 +522,9 @@ def _handoff(df: DataFrame, name: str, sf_dir: str) -> DataFrame:
                     src_bytes += os.path.getsize(p)
         except Exception:
             pass
-        n_out = max(1, min(sc.defaultParallelism, src_bytes // (1 << 20)))
+        n_out = sc.defaultParallelism
+        if src_bytes:
+            n_out = max(1, min(n_out, src_bytes // (1 << 20)))
         df.repartition(n_out).write.mode("overwrite").parquet(path)
         _HANDOFF_WRITTEN.add(path)
     return df.sparkSession.read.parquet(path)

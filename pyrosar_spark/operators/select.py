@@ -221,43 +221,18 @@ def select(
             & (F.col("ymin") <= float(aymax))
             & (F.col("ymax") >= float(aymin))
         )
-        from pyrosar_spark.operators.spatial import (
-            aoi_ring_is_convex,
-            corners_intersect_aoi_filters,
-            flat_ring_intersects_aoi_filters,
-        )
+        from pyrosar_spark.operators.spatial import aoi_ring_is_convex, convex_aoi_refine
 
         if aoi_refine not in ("auto", "arrow"):
             raise ValueError(f"unknown aoi_refine: {aoi_refine!r}")
         if aoi_refine == "auto" and aoi_ring_is_convex(ring):
             # JVM SAT path over the RAW geometry column — corners when
             # available (skips the hull entirely), else the ring
-            # vertices (hull points; same hull, same answer).
-            # The SAT unrolls to dozens of element_at references; when
-            # the geometry column is itself a computed expression (the
-            # deferred from_json parse), CollapseProject would inline
-            # that parse subtree into EVERY reference — a ~180k-char
-            # plan costing seconds of Catalyst analysis per query on
-            # the driver (measured; the ANN de-literal lesson again).
-            # explode(array(col)) is a one-column Generate barrier:
-            # the parse evaluates once, the SAT references the
-            # generator output attribute. One row in, one row out;
-            # a NULL geometry survives as a one-element [NULL] array.
-            # r6: the SAT is applied as a CONJUNCT LIST (one where per
-            # separating axis for the big k branches) instead of one
-            # monolithic CASE — the single expression failed Janino
-            # compilation and ran interpreted since round 5 (spatial.py
-            # ``_sat_conjunct_sqls`` docstring; measured 7.3 → 3.6 s on
-            # the 2M-doc refine). Identical row set, fuzz-differential
-            # and oracle checked.
+            # vertices (hull points; same hull, same answer); values
+            # are bound behind Generate barriers so that its sign-test
+            # Filters compile (spatial.convex_aoi_refine).
             geo = "corners" if "corners" in df.columns else "ring"
-            df = df.withColumn(geo, F.explode(F.array(F.col(geo))))
-            if geo == "corners":
-                sat_filters = corners_intersect_aoi_filters("corners", ring)
-            else:
-                sat_filters = flat_ring_intersects_aoi_filters("ring", ring)
-            for cond in sat_filters:
-                df = df.where(cond)
+            df = convex_aoi_refine(df, geo, ring)
         else:
             df = df.where(_aoi_intersects_udf(ring)(ring_col()))
 

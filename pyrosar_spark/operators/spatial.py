@@ -37,11 +37,6 @@ from pyrosar_spark import geom
 CELL_DEG = 1.0
 
 
-def cell_id(lat_idx: Column, lon_idx: Column) -> Column:
-    """Integer cell id for a (floor(lat), floor(lon)) pair."""
-    return (lat_idx.cast("long") + 90) * 360 + (lon_idx.cast("long") + 180)
-
-
 def cover_cells(
     df: DataFrame,
     xmin="xmin",
@@ -190,34 +185,17 @@ def aoi_frame(spark, aoi_wkts: list[tuple[str, str]]) -> DataFrame:
 # Python refine measured 0.40 in-box 4->16 efficiency on a host that
 # delivers ~17 cores, vs ~0.87 for pure-JVM stages. For a CONVEX AOI the
 # exact footprint-intersects test needs no hull and no Python: the scene
-# footprint is the convex hull of its corner points, and hull-vs-convex
-# intersection decomposes into three pure-arithmetic cases over the raw
-# corners (whole-stage-codegen'd, evaluated only on bbox survivors):
-#   1. some corner strictly/boundary inside the AOI (per-edge sign tests;
-#      valid because the AOI is convex and non-degenerate),
-#   2. some AOI vertex inside the hull = inside SOME triangle of corner
-#      triples (orientation-free sign test; a scene-bbox guard closes the
-#      collinear-triangle-line false positive),
-#   3. some corner-pair segment crosses some AOI edge (hull edges are a
-#      subset of corner-pair segments; a chord crossing still implies
-#      intersection since chords lie inside the hull).
-# Touch counts as intersecting in every case, matching the Arrow kernel.
-
-
-def _orient_col(ax, ay, bx, by, cx, cy):
-    return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-
-
-# The unrolled geometry predicates below are rendered as SQL TEXT and
-# handed to Catalyst via one ``F.expr`` call, not composed from Column
-# objects. Composing them Column-by-Column costs a py4j round trip per
-# node — measured 2.9 s of DRIVER time to build the ~520-node corners
-# SAT (vs 88 ms to EXECUTE it over 81k rows), re-paid on every query
-# construction. The SQL string renders in microseconds of Python and
-# parses JVM-side in milliseconds; the resulting expression tree (and
-# thus semantics, null logic, and generated code) is identical. The
-# Column-composed builders above/below are kept as an independent
-# rendering for parity tests.
+# footprint is the convex hull of its points, and two convex sets are
+# disjoint iff a strict separating line exists through an edge of one of
+# them (separating-axis theorem), which unrolls into flat sign tests over
+# the raw points (:func:`_sat_axes`, applied by :func:`convex_aoi_refine`
+# to bbox survivors only).
+#
+# The predicates are rendered as SQL TEXT and handed to Catalyst through
+# ``F.expr``, not composed from Column objects: composing them
+# Column-by-Column costs a py4j round trip per node (measured 2.9 s of
+# query-build time for the ~520-node SAT, re-paid on every build); the
+# strings render in microseconds and parse JVM-side in milliseconds.
 
 
 def _fd(v: float) -> str:
@@ -239,9 +217,9 @@ def _term(v) -> str:
 
 
 def _orient_sql(ax, ay, bx, by, cx, cy) -> str:
-    """SQL text of ``_orient_col``; args are floats (folded in Python)
-    or SQL snippets. When both segment ends are constants the two
-    differences fold to literals driver-side."""
+    """SQL text of the orientation determinant of (a, b, c); args are
+    floats (folded in Python) or SQL snippets. When both segment ends
+    are constants the two differences fold to literals in Python."""
     const_ab = isinstance(ax, (int, float)) and isinstance(bx, (int, float))
     bax = _fd(bx - ax) if const_ab else f"({_term(bx)}-{_term(ax)})"
     bay = _fd(by - ay) if const_ab else f"({_term(by)}-{_term(ay)})"
@@ -251,8 +229,8 @@ def _orient_sql(ax, ay, bx, by, cx, cy) -> str:
 
 def aoi_ring_is_convex(ring: np.ndarray) -> bool:
     """Driver-side: is the (closed) AOI ring convex with nonzero area?
-    (Degenerate line/point rings return False — the JVM path then skips
-    its case-1 containment test, which needs a real interior.)"""
+    (Degenerate line/point rings return False — the SAT's AOI-edge axes
+    need a real interior, so those AOIs take the Arrow kernel.)"""
     r = np.asarray(ring, dtype=np.float64).reshape(-1, 2)
     if len(r) < 4:  # point / segment rings
         return False
@@ -267,14 +245,16 @@ def aoi_ring_is_convex(ring: np.ndarray) -> bool:
     return bool((cross >= 0).all() or (cross <= 0).all())
 
 
-def _sat_convex_intersects(
-    pt_cols: list[tuple[Column, Column]], aoi_ring: np.ndarray
-) -> Column:
-    """Separating-axis intersects of the convex hull of the given point
-    COLUMNS vs a constant convex AOI — fully UNROLLED flat arithmetic
-    (no higher-order functions: Spark HOF lambdas evaluate interpreted
-    per element, which measured as slow as the Python kernel they were
-    meant to replace; flat comparisons stay inside whole-stage codegen).
+def _sat_axes(
+    pts: list[tuple[str, str]], aoi_ring: np.ndarray
+) -> list[tuple[list[str], int | None]]:
+    """Separating axes of the convex hull of the scene points ``pts``
+    (SQL snippets) vs a constant convex AOI, each as ``(orients, k)``:
+    the SQL of the orient values its test reads, and ``k`` = how many of
+    them are scene-point orients (``None`` for an AOI-edge axis).
+    :func:`_sat_axis_sql` turns one into its "not separated" test. The
+    axes are fully unrolled: Spark HOF lambdas evaluate interpreted per
+    element, which measured as slow as the Python kernel.
 
     Two convex sets are disjoint iff a STRICT separating line exists
     through an edge of one of them. Candidate axes:
@@ -283,10 +263,13 @@ def _sat_convex_intersects(
      - each scene point-pair line (hull edges are a subset of pairs):
        separated iff the remaining scene points are all on one closed
        side while every AOI vertex is STRICTLY on the other. Degenerate
-       pairs (p == q) orient to 0 for every z, so the strict AOI side
-       can never hold — no false separation.
+       pairs (p == q) orient to exactly 0 for every z, so the strict AOI
+       side can never hold — no false separation.
     Touching yields no strict separation ⇒ touch counts as intersect,
-    matching the Arrow kernel.
+    matching the Arrow kernel. A repeated point changes no axis (it
+    orients to exactly 0 against any pair through it and repeats every
+    other test), so a short point list may be padded with copies of
+    one of its points.
     """
     ring = np.asarray(aoi_ring, dtype=np.float64).reshape(-1, 2)
     if geom.ring_area(ring) < 0:  # normalize to CCW so interior is left
@@ -298,306 +281,126 @@ def _sat_convex_intersects(
         if not (ring[i][0] == ring[i + 1][0] and ring[i][1] == ring[i + 1][1])
     ]
     verts = sorted({(float(x), float(y)) for x, y in ring[:-1]})
-
-    def all_of(conds):
-        out = conds[0]
-        for c in conds[1:]:
-            out = out & c
-        return out
-
-    def any_of(conds):
-        out = conds[0]
-        for c in conds[1:]:
-            out = out | c
-        return out
-
-    # axis family 1: AOI edges — all scene points strictly outside
-    sep_aoi = any_of([
-        all_of([
-            _orient_col(F.lit(ax), F.lit(ay), F.lit(bx), F.lit(by), px, py) < 0
-            for (px, py) in pt_cols
-        ])
+    axes: list[tuple[list[str], int | None]] = [
+        ([_orient_sql(ax, ay, bx, by, px, py) for (px, py) in pts], None)
         for (ax, ay, bx, by) in edges
-    ])
-
-    # axis family 2: scene point-pair lines
-    pair_seps = []
-    n = len(pt_cols)
+    ]
+    n = len(pts)
     for i in range(n):
         for j in range(i + 1, n):
-            (px, py), (qx, qy) = pt_cols[i], pt_cols[j]
-            others = [pt_cols[k] for k in range(n) if k != i and k != j]
-            o_sides = [_orient_col(px, py, qx, qy, zx, zy) for (zx, zy) in others]
-            a_sides = [
-                _orient_col(px, py, qx, qy, F.lit(vx), F.lit(vy))
-                for (vx, vy) in verts
-            ]
-            scene_pos = all_of([s >= 0 for s in o_sides]) if o_sides else F.lit(True)
-            scene_neg = all_of([s <= 0 for s in o_sides]) if o_sides else F.lit(True)
-            aoi_neg = all_of([s < 0 for s in a_sides])
-            aoi_pos = all_of([s > 0 for s in a_sides])
-            pair_seps.append((scene_pos & aoi_neg) | (scene_neg & aoi_pos))
-    sep_pairs = any_of(pair_seps) if pair_seps else F.lit(False)
-
-    return ~(sep_aoi | sep_pairs)
+            (px, py), (qx, qy) = pts[i], pts[j]
+            others = [pts[k] for k in range(n) if k != i and k != j]
+            axes.append((
+                [_orient_sql(px, py, qx, qy, zx, zy) for (zx, zy) in others]
+                + [_orient_sql(px, py, qx, qy, vx, vy) for (vx, vy) in verts],
+                len(others),
+            ))
+    return axes
 
 
-def _sat_size_branches(
-    n_col: Column,
-    point_at,
-    aoi_ring: np.ndarray,
-    max_pts: int,
-) -> Column:
-    """Size-guarded CASE WHEN over unrolled SAT variants (k = 1..max).
-
-    ``point_at(i)`` must return SMALL accessor expressions over the raw
-    underlying column (``corners[i].lon`` / ``element_at(ring, 2i-1)``):
-    every orient test embeds copies of these subtrees, so a large
-    accessor (e.g. a ``transform(...)`` normalization) multiplies the
-    expression tree combinatorially and stalls Catalyst ANALYSIS — the
-    first cut of this function did exactly that and planned for minutes.
-    Only the matching branch evaluates per row; NULL / oversized arrays
-    yield NULL (callers' ``where`` drops them, matching the Arrow
-    kernel's False)."""
-    expr = F.lit(None).cast("boolean")
-    for k in range(1, max_pts + 1):
-        expr = F.when(
-            n_col == k,
-            _sat_convex_intersects([point_at(i) for i in range(k)], aoi_ring),
-        ).otherwise(expr)
-    return expr
-
-
-def _sat_convex_intersects_sql(
-    pt_exprs: list[tuple[str, str]], aoi_ring: np.ndarray
-) -> str:
-    """SQL-text rendering of :func:`_sat_convex_intersects` — same
-    axes, same strict/closed comparisons, same null logic (the parsed
-    tree is node-for-node the Column one). ``pt_exprs`` are SQL
-    snippets for the scene points."""
-    ring = np.asarray(aoi_ring, dtype=np.float64).reshape(-1, 2)
-    if geom.ring_area(ring) < 0:
-        ring = ring[::-1]
-    edges = [
-        (float(ring[i][0]), float(ring[i][1]),
-         float(ring[i + 1][0]), float(ring[i + 1][1]))
-        for i in range(len(ring) - 1)
-        if not (ring[i][0] == ring[i + 1][0] and ring[i][1] == ring[i + 1][1])
-    ]
-    verts = sorted({(float(x), float(y)) for x, y in ring[:-1]})
-
+def _sat_axis_sql(vals: list[str], k: int | None) -> str:
+    """"Not separated along this axis" over the axis's orient values
+    (see :func:`_sat_axes`)."""
     def all_of(conds):
         return "(" + " AND ".join(conds) + ")"
 
-    def any_of(conds):
-        return "(" + " OR ".join(conds) + ")"
-
-    sep_aoi = any_of([
-        all_of([
-            f"{_orient_sql(ax, ay, bx, by, px, py)} < 0.0D"
-            for (px, py) in pt_exprs
-        ])
-        for (ax, ay, bx, by) in edges
-    ])
-
-    pair_seps = []
-    n = len(pt_exprs)
-    for i in range(n):
-        for j in range(i + 1, n):
-            (px, py), (qx, qy) = pt_exprs[i], pt_exprs[j]
-            others = [pt_exprs[k] for k in range(n) if k != i and k != j]
-            o_sides = [_orient_sql(px, py, qx, qy, zx, zy) for (zx, zy) in others]
-            a_sides = [_orient_sql(px, py, qx, qy, vx, vy) for (vx, vy) in verts]
-            scene_pos = all_of([f"{s} >= 0.0D" for s in o_sides]) if o_sides else "true"
-            scene_neg = all_of([f"{s} <= 0.0D" for s in o_sides]) if o_sides else "true"
-            aoi_neg = all_of([f"{s} < 0.0D" for s in a_sides])
-            aoi_pos = all_of([f"{s} > 0.0D" for s in a_sides])
-            pair_seps.append(
-                f"(({scene_pos} AND {aoi_neg}) OR ({scene_neg} AND {aoi_pos}))"
-            )
-    sep_pairs = any_of(pair_seps) if pair_seps else "false"
-
-    return f"(NOT ({sep_aoi} OR {sep_pairs}))"
+    if k is None:
+        return "NOT " + all_of([f"{v} < 0.0D" for v in vals])
+    o_sides, a_sides = vals[:k], vals[k:]
+    scene_pos = all_of([f"{s} >= 0.0D" for s in o_sides]) if o_sides else "true"
+    scene_neg = all_of([f"{s} <= 0.0D" for s in o_sides]) if o_sides else "true"
+    aoi_neg = all_of([f"{s} < 0.0D" for s in a_sides])
+    aoi_pos = all_of([f"{s} > 0.0D" for s in a_sides])
+    return f"NOT (({scene_pos} AND {aoi_neg}) OR ({scene_neg} AND {aoi_pos}))"
 
 
-def _sat_size_branches_sql(
-    n_sql: str,
-    point_at,
-    aoi_ring: np.ndarray,
-    max_pts: int,
-) -> str:
-    """SQL-text rendering of :func:`_sat_size_branches`: a CASE over
-    the point count with one unrolled SAT per branch, NULL (dropped)
-    otherwise. Branch conditions are disjoint, so WHEN order does not
-    matter; this matches the Column version's nested ``when`` chain."""
-    branches = "".join(
-        f" WHEN ({n_sql}) = {k} THEN "
-        + _sat_convex_intersects_sql([point_at(i) for i in range(k)], aoi_ring)
-        for k in range(1, max_pts + 1)
-    )
-    return f"(CASE{branches} ELSE CAST(NULL AS BOOLEAN) END)"
+# Most vertices the unrolled SAT tests per geometry column, after
+# dropping a closing point that repeats the first; a row with more
+# vertices is dropped. Catalog corners are exactly 4 points; hull rings
+# have at most 4 vertices + closure, and the ring path keeps one vertex
+# of headroom for rings written elsewhere.
+SAT_MAX_VERTICES = {"corners": 4, "ring": 5}
+# Most orient values one Generate binds. Janino rejects a method over
+# 64 KB, and whole-stage codegen skips any operator with more than
+# spark.sql.codegen.maxFields (100) output fields, which the bound
+# values share with the columns passing through.
+_SAT_CHUNK = 32
 
 
-def _sat_conjunct_sqls(
-    pt_exprs: list[tuple[str, str]], aoi_ring: np.ndarray
-) -> list[str]:
-    """The SAT of :func:`_sat_convex_intersects_sql` decomposed into
-    NOT-separated CONJUNCTS — one per AOI edge axis and one per scene
-    point-pair axis. ANDing all of them is boolean-identical to
-    ``NOT (sep_aoi OR sep_pairs)`` (De Morgan over the axis
-    disjunction), with the same strict/closed comparisons and the same
-    NULL propagation (any NULL conjunct ⇒ the row is dropped either
-    way). The split exists for the CODEGEN, not the algebra: the
-    single ~2.5k-node k=4/k=5 CASE expression fails Janino compilation
-    (measured: 'Failed to compile the generated Java code' on every
-    SAT stage since round 5) and silently falls back to interpreted
-    eval; medium-sized conjuncts compile, and the same 2M-doc refine
-    measured 7.3 s interpreted vs 3.6 s compiled (r6)."""
-    ring = np.asarray(aoi_ring, dtype=np.float64).reshape(-1, 2)
-    if geom.ring_area(ring) < 0:
-        ring = ring[::-1]
-    edges = [
-        (float(ring[i][0]), float(ring[i][1]),
-         float(ring[i + 1][0]), float(ring[i + 1][1]))
-        for i in range(len(ring) - 1)
-        if not (ring[i][0] == ring[i + 1][0] and ring[i][1] == ring[i + 1][1])
+def _sat_steps(geo: str, aoi_ring: np.ndarray) -> list[tuple[str, list[str], str]]:
+    """The convex-AOI refine of :func:`convex_aoi_refine` as
+    ``(generator SQL, bound column names, filter SQL)`` steps."""
+    q = f"`{geo}`"
+    if geo == "corners":
+        size = f"size({q})"
+        closed = f"get({q}, 0) = get({q}, {size} - 1)"
+
+        def at(i):
+            return f"get({q}, {i}).lon", f"get({q}, {i}).lat"
+    else:
+        size = f"(size({q}) div 2)"
+        closed = (f"get({q}, 0) = get({q}, 2 * {size} - 2)"
+                  f" AND get({q}, 1) = get({q}, 2 * {size} - 1)")
+
+        def at(i):
+            return f"get({q}, 2 * {i})", f"get({q}, 2 * {i} + 1)"
+    max_v = SAT_MAX_VERTICES[geo]
+    n = f"_{geo}_n"
+    pts = [(f"_{geo}_x{i}", f"_{geo}_y{i}") for i in range(max_v)]
+    raw = [c for i in range(max_v) for c in at(f"least({i}, {size} - 1)")]
+    # a NULL coordinate nulls the count, so the bound coordinates can be
+    # non-nullable and the operators above generate plain arithmetic
+    has_null = " OR ".join(f"{c} IS NULL" for c in raw)
+    fields = [f"if({has_null}, NULL, {size} - if({size} >= 2 AND {closed}, 1, 0))"]
+    fields += [f"coalesce({c}, 0.0D)" for c in raw]
+    steps = [(fields, [n] + [c for p in pts for c in p], f"{n} BETWEEN 1 AND {max_v}")]
+    chunks: list[list[tuple[list[str], int | None]]] = [[]]
+    for axis in _sat_axes(pts, aoi_ring):
+        if chunks[-1] and sum(len(v) for v, _ in chunks[-1]) + len(axis[0]) > _SAT_CHUNK:
+            chunks.append([])
+        chunks[-1].append(axis)
+    for c, chunk in enumerate(chunks):
+        fields, names, conds = [], [], []
+        for vals, k in chunk:
+            at_names = [f"_sat_o{c}_{len(names) + j}" for j in range(len(vals))]
+            fields += vals
+            names += at_names
+            conds.append(_sat_axis_sql(at_names, k))
+        steps.append((fields, names, " AND ".join(f"({x})" for x in conds)))
+    return [
+        (f"inline(array(struct({', '.join(f'{f} AS {c}' for f, c in zip(fs, cs))})))",
+         cs, cond)
+        for fs, cs, cond in steps
     ]
-    verts = sorted({(float(x), float(y)) for x, y in ring[:-1]})
-
-    def all_of(conds):
-        return "(" + " AND ".join(conds) + ")"
-
-    out = []
-    for (ax, ay, bx, by) in edges:
-        out.append(
-            "(NOT "
-            + all_of([
-                f"{_orient_sql(ax, ay, bx, by, px, py)} < 0.0D"
-                for (px, py) in pt_exprs
-            ])
-            + ")"
-        )
-    n = len(pt_exprs)
-    for i in range(n):
-        for j in range(i + 1, n):
-            (px, py), (qx, qy) = pt_exprs[i], pt_exprs[j]
-            others = [pt_exprs[k] for k in range(n) if k != i and k != j]
-            o_sides = [_orient_sql(px, py, qx, qy, zx, zy) for (zx, zy) in others]
-            a_sides = [_orient_sql(px, py, qx, qy, vx, vy) for (vx, vy) in verts]
-            scene_pos = all_of([f"{s} >= 0.0D" for s in o_sides]) if o_sides else "true"
-            scene_neg = all_of([f"{s} <= 0.0D" for s in o_sides]) if o_sides else "true"
-            aoi_neg = all_of([f"{s} < 0.0D" for s in a_sides])
-            aoi_pos = all_of([f"{s} > 0.0D" for s in a_sides])
-            out.append(
-                f"(NOT (({scene_pos} AND {aoi_neg}) OR ({scene_neg} AND {aoi_pos})))"
-            )
-    return out
 
 
-def _sat_filter_columns(
-    n_sql: str,
-    point_at,
-    aoi_ring: np.ndarray,
-    max_pts: int,
-    split_from: int = 4,
-) -> list[Column]:
-    """Conjunct-form SAT filter list: rows whose point count k is
-    small (< ``split_from``) are tested by their whole (small) SAT in
-    one catch-all conjunct; large-k branches contribute one conjunct
-    per separating axis, each guarded ``CASE WHEN k = K THEN term ELSE
-    TRUE END`` so it is vacuous for other sizes. A leading size-range
-    conjunct drops k = 0, k > max_pts and NULL geometries exactly like
-    the branch CASE's NULL arm did. ANDing the returned columns equals
-    :func:`_sat_size_branches_sql` row-for-row."""
-    out = [F.expr(f"(({n_sql}) >= 1 AND ({n_sql}) <= {max_pts})")]
-    small = [k for k in range(1, min(split_from, max_pts + 1))]
-    if small:
-        branches = "".join(
-            f" WHEN ({n_sql}) = {k} THEN "
-            + _sat_convex_intersects_sql([point_at(i) for i in range(k)], aoi_ring)
-            for k in small
-        )
-        out.append(F.expr(f"(CASE{branches} ELSE TRUE END)"))
-    for k in range(split_from, max_pts + 1):
-        for term in _sat_conjunct_sqls([point_at(i) for i in range(k)], aoi_ring):
-            out.append(F.expr(f"(CASE WHEN ({n_sql}) = {k} THEN {term} ELSE TRUE END)"))
-    return out
+def convex_aoi_refine(df: DataFrame, geo: str, aoi_ring: np.ndarray) -> DataFrame:
+    """Rows of ``df`` whose footprint — the convex hull of the ``geo``
+    column's points — intersects the constant convex ``aoi_ring``.
 
+    ``geo`` is ``corners`` (array<struct<lon,lat>>) or ``ring`` (a flat
+    closed array<double>). A first ``inline(array(struct(...)))``
+    Generate binds the vertex count and each vertex as a plain double
+    column; rows with fewer vertices repeat their last point (``least``
+    clamps the index, as ``get`` is NULL out of range, also under ANSI).
+    NULL, empty and over-size geometries and NULL coordinates get a NULL
+    or out-of-range count and are dropped, like the Arrow kernel's
+    False. Further Generates bind the orient values
+    of the separating axes (:func:`_sat_axes`), at most ``_SAT_CHUNK``
+    at a time, each followed by one ``where`` of sign tests on them.
 
-def corners_intersect_aoi_filters(
-    corners: str, aoi_ring: np.ndarray
-) -> list[Column]:
-    """Conjunct-form of :func:`corners_intersect_aoi` (apply each
-    returned column as a ``where``): identical row set, but the k=4
-    SAT arrives as ~10 medium conjuncts that survive Janino
-    compilation instead of one expression that does not (r6)."""
-    q = f"`{corners}`"
-
-    def at(i: int):
-        return (f"element_at({q}, {i + 1}).lon",
-                f"element_at({q}, {i + 1}).lat")
-
-    return _sat_filter_columns(f"size({q})", at, aoi_ring, max_pts=4)
-
-
-def flat_ring_intersects_aoi_filters(
-    ring_col: str, aoi_ring: np.ndarray
-) -> list[Column]:
-    """Conjunct-form of :func:`flat_ring_intersects_aoi` (same split
-    rationale; k = 4 and 5 branches are split per axis)."""
-    q = f"`{ring_col}`"
-
-    def at(i: int):
-        return (f"element_at({q}, {i * 2 + 1})",
-                f"element_at({q}, {i * 2 + 2})")
-
-    return _sat_filter_columns(
-        f"cast(size({q})/2 as int)", at, aoi_ring, max_pts=5
-    )
-
-
-def corners_intersect_aoi(corners: str, aoi_ring: np.ndarray) -> Column:
-    """SAT intersects for the catalog ``corners`` column NAME
-    (array<struct<lon,lat>>, universally 4 entries) vs a constant
-    convex AOI — unrolled flat codegen arithmetic, rendered as ONE SQL
-    string (the Column-composed rendering cost ~2.9 s of py4j driver
-    time per query build; see the module note above)."""
-    q = f"`{corners}`"
-
-    def at(i: int):
-        return (f"element_at({q}, {i + 1}).lon",
-                f"element_at({q}, {i + 1}).lat")
-
-    # canonical catalog corners are EXACTLY 4 points; lower counts kept
-    # for robustness, higher ones routed to NULL (dropped) — branch
-    # count is also Catalyst ANALYSIS cost, so no speculative headroom
-    return F.expr(_sat_size_branches_sql(f"size({q})", at, aoi_ring, max_pts=4))
-
-
-def flat_ring_intersects_aoi(ring_col: str, aoi_ring: np.ndarray) -> Column:
-    """SAT intersects for a closed flat-ring column NAME (canonical
-    3-5 points + closure) vs a constant convex AOI — one SQL string,
-    tiny element_at accessors."""
-    q = f"`{ring_col}`"
-
-    def at(i: int):
-        return (f"element_at({q}, {i * 2 + 1})",
-                f"element_at({q}, {i * 2 + 2})")
-
-    # canonical closed rings: 2-5 points (degenerate point/segment up
-    # to quad hull + closure)
-    return F.expr(_sat_size_branches_sql(
-        f"cast(size({q})/2 as int)", at, aoi_ring, max_pts=5
-    ))
-
-
-def flat_ring_points(flat: Column) -> Column:
-    """array<double> flat ring → array<array<double>> points (incl. the
-    closing duplicate — harmless for the hull tests)."""
-    return F.transform(
-        F.sequence(F.lit(1), (F.size(flat) / 2).cast("int")),
-        lambda i: F.array(F.element_at(flat, i * 2 - 1), F.element_at(flat, i * 2)),
-    )
+    The Generates are barriers on purpose. Catalyst pushes a filter
+    through a projection by inlining it, so with plain column
+    expressions a computed geometry (the deferred JSON parse) and every
+    point accessor would be repeated inside each orient, and each orient
+    inside each test: the previous form of this refine generated a
+    ~17k-line class that Janino rejected, so it ran interpreted. One row
+    in, one row out per Generate."""
+    out, bound = df, []
+    for gen, cols, cond in _sat_steps(geo, aoi_ring):
+        out = out.select("*", F.expr(gen)).where(cond)
+        bound += cols
+    return out.drop(*bound)
 
 
 def _point_in_flat_ring_sql(px: str, py: str, flat: str) -> str:
@@ -717,17 +520,15 @@ def knn_scenes(
     # (pmod); latitude CLAMPS at the poles — an unclamped _la ± 1 for a
     # pole-adjacent footprint would probe phantom rows outside
     # [-90/s, 90/s) and silently lose recall exactly where polar SAR
-    # coverage is densest (VERDICT r2 #6). Clamped duplicates collapse
-    # in the dropDuplicates below.
+    # coverage is densest (VERDICT r2 #6).
     la_lo, la_hi = -int(round(90 / s)), int(round(90 / s)) - 1
     # r6 (guide §2.4): build the 9 neighbor cells as ONE array and
-    # array_distinct it BEFORE the explode. Every neighbor scene lives
-    # in exactly one home cell, so with distinct probe cells each
-    # (q_id, n_id) pair can meet in at most one cell — the pair-level
-    # dropDuplicates (a full Exchange + two aggregates over the
-    # candidate table, the join's largest intermediate) is removed
-    # outright. Clamped polar duplicates collapse map-side in the
-    # 9-element array instead.
+    # array_distinct it BEFORE the explode, which also collapses the
+    # clamped polar duplicates. Every neighbor scene lives in exactly
+    # one home cell, so with distinct probe cells each (q_id, n_id)
+    # pair can meet in at most one cell and needs no pair-level
+    # dedup (a full Exchange + two aggregates over the candidate
+    # table, the join's largest intermediate).
     cells9 = F.array_distinct(
         F.array(
             *[

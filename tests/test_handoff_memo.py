@@ -44,3 +44,23 @@ def test_handoff_writes_once_per_process_and_recovers_deletion(spark, tmp_path):
 
     shutil.rmtree(path, ignore_errors=True)
     entry_mod._HANDOFF_WRITTEN.discard(path)
+
+
+def test_handoff_of_in_memory_frame_writes_full_width(spark, tmp_path):
+    """A frame with no input files has no known source size; the
+    handoff must not collapse it to one file (one scan task)."""
+    sf_dir = str(tmp_path / "sfmem")
+    os.makedirs(sf_dir)
+    df = spark.createDataFrame([(i,) for i in range(200)], "v long")
+    assert df.inputFiles() == []
+    path = f"{entry_mod._oracle_dir(sf_dir)}/mem_probe.parquet"
+    shutil.rmtree(path, ignore_errors=True)
+    entry_mod._HANDOFF_WRITTEN.discard(path)
+
+    out = entry_mod._handoff(df, "mem_probe", sf_dir)
+    assert out.count() == 200
+    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(files) == min(200, spark.sparkContext.defaultParallelism) > 1
+
+    shutil.rmtree(path, ignore_errors=True)
+    entry_mod._HANDOFF_WRITTEN.discard(path)

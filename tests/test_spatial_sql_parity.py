@@ -1,30 +1,29 @@
-"""Rendering parity for the SQL-text geometry predicates (round 5).
+"""The convex-AOI SAT refine checked against the numpy ``geom`` kernel.
 
-The unrolled SAT predicates are shipped as SQL strings handed to
-``F.expr`` (py4j charges per Column node: the ~520-node corners SAT
-cost 2.9 s of driver wall per query BUILD when composed Column-by-
-Column — BENCH/BASELINE.md round-5 follow-up). The Column-composed
-builders are kept precisely so this suite can pin the claim that the
-two renderings are the SAME expression: value-identical under
-``eqNullSafe`` over real catalog corners, real rings, and an edge-case
-battery (NULL array, empty, undersized, oversized, degenerate points).
+:func:`spatial.convex_aoi_refine` is the engine's one rendering of the
+separating-axis test: unrolled SQL text handed to ``F.expr`` (py4j
+charges per Column node: the ~520-node SAT cost 2.9 s of Python-side
+wall per query BUILD when composed Column-by-Column — BENCH/BASELINE.md
+round-5 follow-up). Its rows must equal the ``geom`` kernel's over
+random catalog corners, random rings and an edge-case battery (NULL
+array, empty, undersized, oversized, degenerate points).
 
 A regression in the SQL renderer (literal suffix, precedence, comment
-lexing — the ``x--60.0D`` trap) shows up here as a non-zero diff count
-without needing the slower scalar-oracle fuzz to hit the broken case.
+lexing — the ``x--60.0D`` trap) shows up here as a row diff without
+needing the slower scalar-oracle fuzz to hit the broken case.
 """
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from pyrosar_spark.operators.spatial import (
-    _sat_size_branches,
-    _sat_size_branches_sql,
-    corners_intersect_aoi,
-    flat_ring_intersects_aoi,
+    SAT_MAX_VERTICES,
+    _sat_steps,
+    convex_aoi_refine,
 )
 
 # a lopsided convex quad and a thin triangle, both with negative
@@ -37,7 +36,7 @@ AOI_TRI = np.array([[10.0, 40.0], [11.5, 40.25], [10.75, 47.0], [10.0, 40.0]])
 
 
 def _corner_rows():
-    """Corner arrays spanning every CASE branch incl. NULL routing."""
+    """Corner arrays of every size the refine handles, and NULL."""
     rng = np.random.default_rng(77)
     rows = []
     for _ in range(300):  # random quads around both AOIs
@@ -46,7 +45,7 @@ def _corner_rows():
             [cx + rng.uniform(-8, 8, 4), cy + rng.uniform(-8, 8, 4)]
         )
         rows.append([{"lon": float(x), "lat": float(y)} for x, y in pts])
-    # size 1..3 (undersized branches), 5 (oversized -> NULL), empty, NULL
+    # size 1..3 (padded), 5 (closed: 4 vertices), empty, NULL
     base = [{"lon": -60.0, "lat": -10.0}, {"lon": 5.0, "lat": -10.0},
             {"lon": 5.0, "lat": 5.0}, {"lon": -60.0, "lat": 5.0},
             {"lon": -60.0, "lat": -10.0}]
@@ -75,46 +74,45 @@ def _ring_rows():
     rows.append([float(v) for v in (-60.0, -10.0, -60.0, -10.0)])  # point
     rows.append([])
     rows.append(None)
-    # oversized: 6 points + closure -> routed to NULL by both forms
+    # oversized: 6 points + closure -> dropped
     hexa = np.array([[0, 0], [2, 0], [3, 1], [2, 2], [0, 2], [-1, 1], [0, 0]],
                     dtype=np.float64)
     rows.append([float(v) for v in hexa.ravel()])
     return [(r,) for r in rows]
 
 
-def _assert_zero_diffs(df, col_form, sql_form):
-    diffs = df.where(~col_form.eqNullSafe(sql_form)).count()
-    assert diffs == 0
+def _points(geo, row):
+    if row is None:
+        return None
+    if geo == "corners":
+        return [(p["lon"], p["lat"]) for p in row]
+    return list(zip(row[0::2], row[1::2]))
 
 
-@pytest.mark.parametrize("aoi", [AOI_QUAD, AOI_TRI], ids=["quad", "tri"])
-def test_corners_sql_matches_column_rendering(spark, aoi):
+def _assert_matches_geom(spark, geo, rows, aoi, sat_expected):
     df = spark.createDataFrame(
-        _corner_rows(), "corners array<struct<lon double, lat double>>"
+        [(i, r) for i, (r,) in enumerate(rows)],
+        f"id long, {geo} "
+        + ("array<struct<lon double, lat double>>" if geo == "corners" else "array<double>"),
     )
-
-    def at(i):
-        p = F.element_at(F.col("corners"), i + 1)
-        return (p["lon"], p["lat"])
-
-    col_form = _sat_size_branches(F.size(F.col("corners")), at, aoi, max_pts=4)
-    _assert_zero_diffs(df, col_form, corners_intersect_aoi("corners", aoi))
+    got = sorted(r.id for r in convex_aoi_refine(df, geo, aoi).select("id").collect())
+    want = [
+        i for i, (r,) in enumerate(rows)
+        if sat_expected(_points(geo, r), aoi, SAT_MAX_VERTICES[geo])
+    ]
+    assert got == want
 
 
 @pytest.mark.parametrize("aoi", [AOI_QUAD, AOI_TRI], ids=["quad", "tri"])
-def test_flat_ring_sql_matches_column_rendering(spark, aoi):
-    df = spark.createDataFrame(_ring_rows(), "ring array<double>")
+def test_corners_sql_matches_column_rendering(spark, aoi, sat_expected):
+    """The rendered SQL selects the corner rows the geom kernel selects."""
+    _assert_matches_geom(spark, "corners", _corner_rows(), aoi, sat_expected)
 
-    def at(i):
-        return (
-            F.element_at(F.col("ring"), i * 2 + 1),
-            F.element_at(F.col("ring"), i * 2 + 2),
-        )
 
-    col_form = _sat_size_branches(
-        (F.size(F.col("ring")) / 2).cast("int"), at, aoi, max_pts=5
-    )
-    _assert_zero_diffs(df, col_form, flat_ring_intersects_aoi("ring", aoi))
+@pytest.mark.parametrize("aoi", [AOI_QUAD, AOI_TRI], ids=["quad", "tri"])
+def test_flat_ring_sql_matches_column_rendering(spark, aoi, sat_expected):
+    """The rendered SQL selects the ring rows the geom kernel selects."""
+    _assert_matches_geom(spark, "ring", _ring_rows(), aoi, sat_expected)
 
 
 def test_non_finite_aoi_coordinate_rejected_at_render_time():
@@ -122,7 +120,7 @@ def test_non_finite_aoi_coordinate_rejected_at_render_time():
     the renderer must refuse non-finite coordinates up front."""
     bad = np.array([[0.0, 0.0], [1.0, 0.0], [np.inf, 1.0], [0.0, 0.0]])
     with pytest.raises(ValueError, match="non-finite"):
-        flat_ring_intersects_aoi("ring", bad)
+        _sat_steps("ring", bad)
 
 
 def test_sql_text_has_no_comment_or_decimal_traps():
@@ -130,14 +128,7 @@ def test_sql_text_has_no_comment_or_decimal_traps():
     renderer exists to avoid: a double literal without the D suffix
     (silently parses as DECIMAL and poisons the arithmetic) and a
     bare ``--`` (lexes as a line comment, truncating the predicate)."""
-    import re
-
-    def at(i):
-        return (f"element_at(`ring`, {i * 2 + 1})",
-                f"element_at(`ring`, {i * 2 + 2})")
-
-    txt = _sat_size_branches_sql("cast(size(`ring`)/2 as int)", at,
-                                 AOI_QUAD, max_pts=5)
+    txt = " ".join(gen + " " + cond for gen, _, cond in _sat_steps("ring", AOI_QUAD))
     assert "--" not in txt
     # every float literal carries the D suffix
     bare = [
